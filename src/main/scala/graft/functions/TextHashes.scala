@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -258,13 +258,11 @@ case class BigramHashes(child: Expression) extends UnaryExpression {
 /** `ngram_hashes(array<string>, n, truncShort) -> array<bigint>` distinct
   * chained-xxhash64 window hashes (n and truncShort must be literals). */
 case class NgramHashes(child: Expression, n: Int, truncShort: Boolean)
-    extends UnaryExpression {
+    extends UnaryExpression with ImplicitCastInputTypes {
   require(n >= 1, s"ngram_hashes n must be >= 1: $n")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"expected array<string>, got $t")
-  }
+  // type coercion casts e.g. an empty `array()` (array<void>) to array<string>
+  override def inputTypes: Seq[ArrayType] = Seq(ArrayType(StringType))
   override def nullSafeEval(a: Any): Any =
     TextHashes.ngramHashes(a.asInstanceOf[ArrayData], n, truncShort)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =

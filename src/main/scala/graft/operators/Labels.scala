@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.filters.FilterCompiler
+import graft.filters.FilterCompiler.FeatureCols
 import graft.model.{ClassSpec, Coord, MlType}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -17,6 +18,8 @@ import org.apache.spark.sql.functions._
   *
   * All label math here is built-in Column arithmetic (codegen'd, shuffles
   * once on the tile key); rasterization (A3) lives in [[Segmentation]].
+  * The `*Label` forms compute the same labels as per-row projections over
+  * one tile's `features` array, with no shuffle (what `LabelMakerJob` runs).
   */
 /** 0-4096-space geometry bounds carried out of [[Labels.negBufferBounds]] —
   * top-level (not nested in the object) so the UnsafeProjection's generated
@@ -27,6 +30,26 @@ final case class Bounds4096(minx: Double, miny: Double, maxx: Double, maxy: Doub
 
 object Labels {
   private val tileKey = Seq("z", "x", "y")
+
+  /** The 0-row object-detection label (`label.py:105-106`). */
+  private def noBoxes: Column = typedLit(Seq.empty[(Int, Int, Int, Int, Int)])
+    .cast("array<struct<xmin:int,ymin:int,xmax:int,ymax:int,cls:int>>")
+
+  /** A feature struct's filter columns, for predicates over a lambda
+    * variable bound to one element of a tile's `features` array. */
+  private def featureCols(f: Column): FeatureCols =
+    FeatureCols(f.getField("props"), f.getField("geomType"), f.getField("id"))
+
+  /** A1 for one tile, as a projection over its `features` array (the
+    * relational feature form's structs, in fidx order): slot i+1 =
+    * EXISTS(feature matching filter_i), slot 0 = background. Same label
+    * as [[classification]], with no shuffle. */
+  def classificationLabel(features: Column, classes: Seq[ClassSpec]): Column = {
+    if (classes.isEmpty) return array(lit(1))
+    val cs = classes.map(c =>
+      when(exists(features, f => FilterCompiler.compile(c.filter, featureCols(f))), 1).otherwise(0))
+    array(when(cs.reduce(_ + _) === 0, 1).otherwise(0) +: cs: _*)
+  }
 
   /** A1 — classification: slot i+1 = EXISTS(feature matching filter_i),
     * slot 0 = background (1 iff no class fired), `label.py:15-23`. */
@@ -89,9 +112,7 @@ object Labels {
     * once per class. */
   def objectDetection(tiles: DataFrame, features: DataFrame, classes: Seq[ClassSpec]): DataFrame = {
     if (classes.isEmpty) // no classes -> every tile gets the 0-row label
-      return tiles.select(col("z"), col("x"), col("y"),
-        typedLit(Seq.empty[(Int, Int, Int, Int, Int)])
-          .cast("array<struct<xmin:int,ymin:int,xmax:int,ymax:int,cls:int>>").as("label"))
+      return tiles.select(col("z"), col("x"), col("y"), noBoxes.as("label"))
     val classEntries = array(classes.zipWithIndex.map { case (c, i) =>
       struct(
         lit(i).as("cidx"),
@@ -141,8 +162,42 @@ object Labels {
           b.getField("cls").as("cls"))).as("label"))
     tiles.join(agg, tileKey, "left")
       .select(col("z"), col("x"), col("y"),
-        coalesce(col("label"), typedLit(Seq.empty[(Int, Int, Int, Int, Int)])
-          .cast("array<struct<xmin:int,ymin:int,xmax:int,ymax:int,cls:int>>")).as("label"))
+        coalesce(col("label"), noBoxes).as("label"))
+  }
+
+  /** A2 for one tile, as a projection over its `features` array (fidx
+    * order): per feature, the boxes of its matching classes in class order,
+    * so the array is already in the reference's feature-then-class order
+    * (`label.py:24-35`) with no sort. Same label as [[objectDetection]],
+    * with no shuffle; [[negBufferBounds]] enters only for classes with a
+    * negative buffer, and a geometry that shrinks away emits no box. */
+  def objectDetectionLabel(features: Column, classes: Seq[ClassSpec]): Column = {
+    if (classes.isEmpty) return noBoxes
+    val boxes = flatten(transform(
+      filter(features, f => size(flatten(f.getField("parts"))) > 0),
+      { f =>
+        val flat = flatten(f.getField("parts"))
+        def bound(agg: Column => Column, axis: String): Column =
+          agg(transform(flat, p => p.getField(axis)))
+        // per class: null unless the feature matches; bounds in 0-4096 space
+        val candidates = array(classes.zipWithIndex.map { case (c, i) =>
+          val bounds = c.buffer.getOrElse(0.0) match {
+            case b if b < 0 => negBufferBounds(f.getField("geomType"), f.getField("parts"), lit(b))
+            case b => struct(
+              (bound(array_min, "x") - b).as("minx"), (bound(array_min, "y") - b).as("miny"),
+              (bound(array_max, "x") + b).as("maxx"), (bound(array_max, "y") + b).as("maxy"))
+          }
+          when(FilterCompiler.compile(c.filter, featureCols(f)),
+            struct(lit(i + 1).as("cls"), bounds.as("b")))
+        }: _*)
+        transform(filter(candidates, e => e.isNotNull && e.getField("b").isNotNull), { e =>
+          val b = e.getField("b")
+          val Seq(x0, y0, x1, y1) = pixelBboxCols(
+            b.getField("minx"), b.getField("miny"), b.getField("maxx"), b.getField("maxy"))
+          struct(x0.as("xmin"), y0.as("ymin"), x1.as("xmax"), y1.as("ymax"), e.getField("cls").as("cls"))
+        })
+      }))
+    coalesce(boxes, noBoxes) // non-nullable, like the relational form's label
   }
 
   /** A5 — class_match (`utils.py:32-40`): does a label contain class i. */

@@ -2,9 +2,14 @@ package graft.operators
 
 import graft.filters.GLFilter
 import graft.model.{ClassSpec, Coord, FeatureRow}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.locationtech.jts.geom.{Coordinate, Geometry, GeometryFactory, LineString, Point, Polygon}
+
+/** A tile's features, the argument of [[Segmentation.segmentationLabel]]'s
+  * UDF — top-level (not nested in the object) so generated deserializer
+  * code can resolve it, like [[Bounds4096]]. */
+final case class TileFeatures(features: Seq[FeatureRow])
 
 /** A3 — segmentation label: per-tile 256x256 class-index raster
   * (`label.py:36-54`), as a `mapGroups` aggregation with an in-JVM
@@ -199,6 +204,14 @@ object Segmentation {
     }
     rasterize(geos.toSeq)
   }
+
+  /** A3 for one tile, as a projection over its `features` array (the
+    * relational feature form's structs): [[labelForTile]] per row, no
+    * shuffle. The array rides in a one-field struct because a Scala UDF
+    * decodes case classes only from a top-level struct argument. */
+  def segmentationLabel(features: Column, classes: Seq[ClassSpec]): Column =
+    udf((t: TileFeatures) => labelForTile(t.features, classes)).asNonNullable()(
+      struct(features.as("features")))
 
   /** The distributed operator: tiles left-joined with per-tile rasters;
     * featureless tiles get the all-background raster (`label.py:107-108`). */

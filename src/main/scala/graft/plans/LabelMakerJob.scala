@@ -6,6 +6,7 @@ import graft.operators.{Labels, Segmentation, TileEnumeration}
 import graft.sources.TileSources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
 
 /** The reference's job API (`LabelMakerJob`, `main.py:69-111`) re-expressed
   * as a lazy Dataset plan (P1-P6, SURVEY §2.4).
@@ -41,29 +42,36 @@ final case class LabelMakerJob(
 
   /** P2/P3 — the full labeled-tile plan: (z, x, y, label[, image cols]).
     * Lazy; `explain` it for the reference's `dask.visualize` equivalent. */
-  def build(spark: SparkSession): DataFrame = {
-    val t = tiles(spark)
+  def build(spark: SparkSession): DataFrame = plan(spark)._1
+
+  /** One pass per tile, shuffle-free: the tile keyspace feeds one fetch
+    * stage that emits each tile's features (and image) as one row, and the
+    * label is a per-row projection over that row's features — every tile
+    * gets a label by construction (A4), and label and image pair up
+    * without the reference's implicit tile-key join (`main.py:90-97`).
+    * Also returns the accumulator counting label fetch/decode failures. */
+  private def plan(spark: SparkSession): (DataFrame, LongAccumulator) = {
     val failures = spark.sparkContext.longAccumulator("label_fetch_failures")
-    val features = TileSources.vectorFeatures(t, labelSource, failures = Some(failures))
-    val labeled = mlType match {
-      case MlType.Classification => Labels.classification(t, features.toDF(), classes)
-      case MlType.ObjectDetection => Labels.objectDetection(t, features.toDF(), classes)
-      case MlType.Segmentation => Segmentation.segmentation(t, features, classes)
+    val inputs = TileSources.tileInputs(tiles(spark), Some(labelSource), imagery,
+      failures = Some(failures))
+    val features = col("features")
+    val label = mlType match {
+      case MlType.Classification => Labels.classificationLabel(features, classes)
+      case MlType.ObjectDetection => Labels.objectDetectionLabel(features, classes)
+      case MlType.Segmentation => Segmentation.segmentationLabel(features, classes)
     }
-    imagery match {
-      case None => labeled
-      case Some(img) =>
-        // the reference's implicit 1:1 tile-key join of label and image
-        // stages (`main.py:90-97`)
-        val images = TileSources.images(t, img).toDF()
-          .withColumnRenamed("data", "image")
-        labeled.join(images, Seq("z", "x", "y"))
-    }
+    val imageCols = if (imagery.isEmpty) Nil else Seq("height", "width", "bands", "image").map(col)
+    (inputs.select(Seq(col("z"), col("x"), col("y"), label.as("label")) ++ imageCols: _*), failures)
   }
 
-  /** P6 — execute into a parquet sink (the scale path). */
-  def writeParquet(spark: SparkSession, path: String): Unit =
-    build(spark).write.mode("overwrite").parquet(path)
+  /** P6 — execute into a parquet sink (the scale path). Returns the number
+    * of tiles whose label failed to fetch or decode (they carry the empty
+    * label). */
+  def writeParquet(spark: SparkSession, path: String): Long = {
+    val (df, failures) = plan(spark)
+    df.write.mode("overwrite").parquet(path)
+    failures.value
+  }
 
   /** P6 — notebook-style gather (small jobs only). */
   def collect(spark: SparkSession): Array[org.apache.spark.sql.Row] =

@@ -2,7 +2,7 @@ package graft.sources
 
 import graft.core.Tiles
 import graft.model.{Coord, FeatureRow}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 
@@ -12,12 +12,10 @@ import java.time.Duration
 
 /** HTTP tile sources (SURVEY §2.1 S2/S4/S6/S7).
   *
-  * Executor-side fetches run in `mapPartitions` with one shared
-  * `HttpClient` per JVM (the reference builds a session per task via
-  * `requests.get`, `main.py:39`/`utils.py:50`); failures follow the
-  * reference's semantics: label fetch/decode errors degrade to an empty
-  * feature set (`main.py:38-44`) — but are counted in an accumulator
-  * instead of silently swallowed.
+  * Executor-side fetches run in one `mapPartitions` pass per tile
+  * ([[TileSources.tileInputs]]) with one shared `HttpClient` per JVM (the
+  * reference builds a session per task via `requests.get`,
+  * `main.py:39`/`utils.py:50`).
   */
 object TileSources {
 
@@ -26,15 +24,6 @@ object TileSources {
     .connectTimeout(Duration.ofSeconds(10))
     .followRedirects(HttpClient.Redirect.NORMAL)
     .build()
-
-  def httpGet(url: String): Array[Byte] = {
-    val req = HttpRequest.newBuilder(URI.create(url))
-      .timeout(Duration.ofSeconds(30)).GET().build()
-    val resp = client.send(req, HttpResponse.BodyHandlers.ofByteArray())
-    if (resp.statusCode() / 100 != 2)
-      throw new java.io.IOException(s"HTTP ${resp.statusCode()} for $url")
-    resp.body()
-  }
 
   private def httpGetAsync(url: String): java.util.concurrent.CompletableFuture[Array[Byte]] = {
     val req = HttpRequest.newBuilder(URI.create(url))
@@ -46,31 +35,26 @@ object TileSources {
     }
   }
 
-  /** Windowed async prefetch over a partition's rows: keeps `window`
-    * requests in flight so per-request latency (network RTT, server
-    * stalls) overlaps instead of serializing. Order-preserving. This is
-    * what makes HTTP-bound source stages latency-tolerant at any
-    * partition count — the knob that matters when the fetch, not the
-    * CPU, is the bottleneck. */
-  private[sources] def prefetched[A, B](it: Iterator[A], window: Int)(
-      start: A => java.util.concurrent.CompletableFuture[B]): Iterator[(A, scala.util.Try[B])] = {
-    val queue = scala.collection.mutable.Queue[(A, java.util.concurrent.CompletableFuture[B])]()
-    new Iterator[(A, scala.util.Try[B])] {
+  /** Windowed lookahead over a partition's rows: keeps `window` rows
+    * started ahead of the consumer, so the latency of the async requests
+    * `start` sends (network RTT, server stalls) overlaps instead of
+    * serializing. Order-preserving. This is what makes HTTP-bound source
+    * stages latency-tolerant at any partition count — the knob that matters
+    * when the fetch, not the CPU, is the bottleneck. */
+  private[sources] def prefetched[A, B](it: Iterator[A], window: Int)(start: A => B): Iterator[(A, B)] = {
+    val queue = scala.collection.mutable.Queue[(A, B)]()
+    new Iterator[(A, B)] {
       private def fill(): Unit =
         while (queue.size < window && it.hasNext) {
           val a = it.next()
           queue.enqueue((a, start(a)))
         }
       override def hasNext: Boolean = { fill(); queue.nonEmpty }
-      override def next(): (A, scala.util.Try[B]) = {
-        fill()
-        val (a, f) = queue.dequeue()
-        (a, scala.util.Try(f.join()))
-      }
+      override def next(): (A, B) = { fill(); queue.dequeue() }
     }
   }
 
-  /** In-flight requests per partition for tile fetch stages. */
+  /** Tiles in flight per partition (each with its label and image request). */
   val FetchWindow = 16
 
   /** `str.format`-style URL templating (`utils.py:27-29`) with the
@@ -81,41 +65,6 @@ object TileSources {
       .map(t => template.replace("{ACCESS_TOKEN}", t)).getOrElse(template)
     withToken
       .replace("{z}", z.toString).replace("{x}", x.toString).replace("{y}", y.toString)
-  }
-
-  // ---- S2 + S3: vector-tile fetch + MVT decode -> relational features ----
-
-  /** Fetch + decode the label source for every tile; emit the relational
-    * feature rows of the layer the pipeline reads ("osm", `label.py:13`).
-    * Tiles that fail to fetch/decode, or lack the layer, emit no rows (the
-    * downstream left join restores them with empty labels, A4). */
-  def vectorFeatures(tiles: DataFrame, labelSource: String,
-      layer: String = "osm",
-      failures: Option[LongAccumulator] = None): Dataset[FeatureRow] = {
-    val spark = tiles.sparkSession
-    import spark.implicits._
-    tiles.select(col("z").cast("int"), col("x").cast("int"), col("y").cast("int"))
-      .as[(Int, Int, Int)]
-      .mapPartitions { it =>
-        prefetched(it, FetchWindow) { case (z, x, y) =>
-          httpGetAsync(fillUrl(labelSource, z, x, y))
-        }.flatMap { case ((z, x, y), bytes) =>
-          val decoded = bytes.map(Mvt.decode) match {
-            case scala.util.Success(d) => d
-            case scala.util.Failure(_) =>
-              failures.foreach(_.add(1L))
-              Map.empty[String, Seq[Mvt.MvtFeature]]
-          }
-          decoded.getOrElse(layer, Seq.empty).iterator.zipWithIndex.map { case (f, i) =>
-            FeatureRow(z, x, y, i,
-              geomType = if (f.multi) "Multi" + f.geomType else f.geomType,
-              multi = f.multi,
-              parts = f.parts.map(_.map { case (px, py) => Coord(px, py) }.toSeq).toSeq,
-              props = f.props,
-              id = f.id)
-          }
-        }
-      }
   }
 
   // ---- S4/S6: imagery fetch ----
@@ -200,7 +149,7 @@ object TileSources {
     * imagery path on every task, `utils.py:98-127`): `{bbox}` -> WMS;
     * .tif/.tiff/.vrt suffix -> COG; otherwise TMS.
     *
-    * With `probeContent` (what [[images]] passes), a concrete (placeholder-
+    * With `probeContent` (what [[tileInputs]] passes), a concrete (placeholder-
     * free) path with no recognizable extension is probed by its first 4
     * bytes via one ranged read — the reference checks file CONTENT
     * (rasterio driver in {GTiff, VRT}, `utils.py:98-113`), so a COG behind
@@ -220,37 +169,80 @@ object TileSources {
       if (magic.exists(isTiffMagic)) CogSource else TmsSource
     } else TmsSource
 
-  /** Fetch imagery for every tile (S4 TMS / S6 WMS / S5 COG windowed
-    * read). Fetch errors fail the task (Spark retries), matching the
-    * reference's uncaught image-path errors (`main.py:50-63`) while
-    * keeping at-least-once semantics. */
-  def images(tiles: DataFrame, imagery: String): Dataset[ImageTile] = {
+  // ---- S2-S7: one fetch pass per tile ----
+
+  /** One tile's fetched inputs: its label layer's features in fidx order
+    * (empty when the label tile is missing, fails to fetch or decode, or
+    * lacks the layer) and, with imagery, its decoded image (else 0 x 0 x 0
+    * and a null `image`). */
+  final case class TileInputs(z: Int, x: Int, y: Int, features: Seq[FeatureRow],
+      height: Int, width: Int, bands: Int, image: Array[Byte])
+
+  /** Fetches every tile's label (S2 + S3 MVT decode of the layer the
+    * pipeline reads, "osm", `label.py:13`) and imagery (S4 TMS / S6 WMS /
+    * S5 COG windowed read) in one pass, one row per tile: a tile whose label
+    * fails still emits its row (A4), and label and image pair up without a
+    * join (`main.py:90-97`). A tile's label and image requests go out
+    * together, [[FetchWindow]] tiles ahead; COG reads stay synchronous.
+    *
+    * Failures follow the reference: label fetch/decode errors degrade to an
+    * empty feature set (`main.py:38-44`), counted in `failures` instead of
+    * silently swallowed; image errors fail the task (Spark retries), as the
+    * reference's image-path errors go uncaught (`main.py:50-63`). */
+  def tileInputs(tiles: DataFrame, labelSource: Option[String], imagery: Option[String],
+      layer: String = "osm", failures: Option[LongAccumulator] = None): Dataset[TileInputs] = {
     val spark = tiles.sparkSession
     import spark.implicits._
-    val source = dispatch(imagery, probeContent = true)
+    val source = imagery.map(dispatch(_, probeContent = true))
+    // a tile's image URL, for the sources fetched over HTTP
+    def imageUrl(z: Int, x: Int, y: Int): Option[String] = imagery.zip(source).collect {
+      case (img, WmsSource) => wmsUrl(fillUrl(img, z, x, y), z, x, y)
+      case (img, TmsSource) => fillUrl(img, z, x, y)
+    }
     tiles.select(col("z").cast("int"), col("x").cast("int"), col("y").cast("int"))
       .as[(Int, Int, Int)]
       .mapPartitions { it =>
-        source match {
-          case CogSource =>
-            it.map { case (z, x, y) =>
-              val (h, w, bands, data) = CogReader.tile(imagery, graft.core.TileKey(z, x, y))
-              ImageTile(z, x, y, h, w, bands, data)
-            }
-          case other =>
-            prefetched(it, FetchWindow) { case (z, x, y) =>
-              val url = other match {
-                case WmsSource => wmsUrl(fillUrl(imagery, z, x, y), z, x, y)
-                case _ => fillUrl(imagery, z, x, y)
-              }
-              httpGetAsync(url)
-            }.map { case ((z, x, y), bytes) =>
-              // image errors fail the task (Spark retries) — reference
-              // parity for the uncaught image path
-              val (h, w, bands, data) = decodeImage(bytes.get)
-              ImageTile(z, x, y, h, w, bands, data)
-            }
+        prefetched(it, FetchWindow) { case (z, x, y) =>
+          (labelSource.map(src => httpGetAsync(fillUrl(src, z, x, y))),
+            imageUrl(z, x, y).map(httpGetAsync))
+        }.map { case ((z, x, y), (label, image)) =>
+          val decoded = label.fold(Map.empty[String, Seq[Mvt.MvtFeature]]) { f =>
+            scala.util.Try(Mvt.decode(f.join())).getOrElse { failures.foreach(_.add(1L)); Map.empty }
+          }
+          val features = decoded.getOrElse(layer, Seq.empty).zipWithIndex.map { case (f, i) =>
+            FeatureRow(z, x, y, i,
+              geomType = if (f.multi) "Multi" + f.geomType else f.geomType,
+              multi = f.multi,
+              parts = f.parts.map(_.map { case (px, py) => Coord(px, py) }.toSeq).toSeq,
+              props = f.props,
+              id = f.id)
+          }
+          val (h, w, bands, data) = (image, source) match {
+            case (Some(f), _) => decodeImage(f.join()) // throws: fails the task
+            case (None, Some(CogSource)) => CogReader.tile(imagery.get, graft.core.TileKey(z, x, y))
+            case _ => (0, 0, 0, null)
+          }
+          TileInputs(z, x, y, features, h, w, bands, data)
         }
       }
+  }
+
+  /** Every tile's label-layer features, one row each: [[tileInputs]]
+    * without imagery. Tiles with no features emit no rows. */
+  def vectorFeatures(tiles: DataFrame, labelSource: String,
+      layer: String = "osm",
+      failures: Option[LongAccumulator] = None): Dataset[FeatureRow] = {
+    val spark = tiles.sparkSession
+    import spark.implicits._
+    tileInputs(tiles, Some(labelSource), None, layer, failures)
+      .select(explode(col("features")).as("f")).select("f.*").as[FeatureRow]
+  }
+
+  /** Every tile's image: [[tileInputs]] without a label source. */
+  def images(tiles: DataFrame, imagery: String): Dataset[ImageTile] = {
+    val spark = tiles.sparkSession
+    import spark.implicits._
+    tileInputs(tiles, None, Some(imagery))
+      .select($"z", $"x", $"y", $"height", $"width", $"bands", $"image".as("data")).as[ImageTile]
   }
 }

@@ -121,4 +121,30 @@ class LabelsSpec extends SparkSpec {
       .select(Labels.classMatch("object-detection", col("label"), 2)).collect()
     assert(m2(0).getBoolean(0) && !m2(1).getBoolean(0))
   }
+
+  test("per-tile label columns equal the relational operators, empty tile and buffers included") {
+    import org.apache.spark.sql.functions.col
+    val perTile = Seq((13, 0, 0, features), (13, 1, 0, Seq.empty[FeatureRow]))
+      .toDF("z", "x", "y", "features").orderBy("x")
+    val buffered = ClassSpec.parseJson(
+      """[{"name": "B", "filter": ["has", "building"], "buffer": -500.0},
+        |  {"name": "R", "filter": ["has", "highway"], "buffer": 30.0},
+        |  {"name": "G", "filter": ["has", "building"], "buffer": -5000.0},
+        |  {"name": "P", "filter": ["!has", "building"], "buffer": -1.0}]""".stripMargin)
+    def labels(df: DataFrame, label: org.apache.spark.sql.Column): Seq[Any] =
+      df.select(label).collect().toSeq.map(_.get(0) match {
+        case b: Array[Byte] => b.toSeq
+        case other => other
+      })
+    val f = col("features")
+    for (cls <- Seq(classes, buffered, Seq.empty[ClassSpec])) {
+      def relational(df: DataFrame) = labels(df.orderBy("x"), col("label"))
+      assert(labels(perTile, Labels.classificationLabel(f, cls)) ==
+        relational(Labels.classification(tilesDf, featuresDf, cls)))
+      assert(labels(perTile, Labels.objectDetectionLabel(f, cls)) ==
+        relational(Labels.objectDetection(tilesDf, featuresDf, cls)))
+      assert(labels(perTile, Segmentation.segmentationLabel(f, cls)) ==
+        relational(Segmentation.segmentation(tilesDf, features.toDS(), cls)))
+    }
+  }
 }

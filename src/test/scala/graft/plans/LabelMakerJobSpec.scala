@@ -3,14 +3,19 @@ package graft.plans
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import graft.SparkSpec
 import graft.core.BBox
+import graft.model.MlType
 import graft.sources.Mvt
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.RangeExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 
 import java.net.InetSocketAddress
 
 /** Pipeline e2e (SURVEY §5.3): local HTTP stub serving fixture MVT + PNG
   * tiles -> full LabelMakerJob on local[4] -> per-tile records. */
-class LabelMakerJobSpec extends SparkSpec {
+class LabelMakerJobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val classesJson =
     """[
@@ -205,5 +210,127 @@ class LabelMakerJobSpec extends SparkSpec {
       mlType = "classification")
     val plan = job.build(spark).queryExecution.toString
     assert(plan.nonEmpty) // building the plan must not touch the network
+  }
+
+  // ---- the one-pass plan ----
+
+  private val bounds = Seq(bbox.west, bbox.south, bbox.east, bbox.north)
+  private val mlTypes = Seq(MlType.Classification, MlType.ObjectDetection, MlType.Segmentation)
+  private def tms(port: Int) = s"http://localhost:$port/img/{z}/{x}/{y}.png"
+
+  private def assertSolidImage(r: Row): Unit = {
+    assert(r.getInt(r.fieldIndex("height")) == 256 && r.getInt(r.fieldIndex("width")) == 256)
+    val img = r.getAs[Array[Byte]](r.fieldIndex("image"))
+    assert(img.length == 256 * 256 * 3)
+    assert(img(0) == 10.toByte && img(1) == 200.toByte && img(2) == 30.toByte)
+  }
+
+  /** The label every tile gets when it has no features (A4). */
+  private def assertEmptyLabel(ml: String, r: Row, nClasses: Int): Unit = ml match {
+    case MlType.Classification =>
+      assert(r.getSeq[Int](r.fieldIndex("label")) == (1 +: Seq.fill(nClasses)(0)))
+    case MlType.ObjectDetection => assert(r.getSeq[Row](r.fieldIndex("label")).isEmpty)
+    case _ => assert(r.getAs[Array[Byte]](r.fieldIndex("label")).forall(_ == 0))
+  }
+
+  test("one pass per tile: no shuffle, no join, one Range scan (every ml_type, +/- imagery)") {
+    withServer { port =>
+      for (ml <- mlTypes; imagery <- Seq(null, tms(port))) {
+        val df = LabelMakerJob(13, bounds, classesJson, imagery,
+          s"http://localhost:$port/labels/{z}/{x}/{y}.pbf", ml).build(spark)
+        df.write.format("noop").mode("overwrite").save()
+        val plan = df.queryExecution.executedPlan
+        val what = s"$ml, imagery=${imagery != null}:\n$plan"
+        assert(collect(plan) { case e: ShuffleExchangeLike => e }.isEmpty, what)
+        assert(collect(plan) { case e: BroadcastExchangeLike => e }.isEmpty, what)
+        assert(collect(plan) { case j: BaseJoinExec => j }.isEmpty, what)
+        assert(collect(plan) { case r: RangeExec => r }.size == 1, what)
+      }
+    }
+  }
+
+  test("writeParquet returns the label fetch failures: 4 on bad/, 0 on a good source") {
+    withServer { port =>
+      val dir = java.nio.file.Files.createTempDirectory("failures").toString
+      val job = LabelMakerJob(13, bounds, classesJson, imagery = null,
+        labelSource = s"http://localhost:$port/bad/{z}/{x}/{y}.pbf", mlType = "object-detection")
+      assert(job.writeParquet(spark, dir + "/bad") == 4)
+      assert(spark.read.parquet(dir + "/bad").count() == 4)
+      val good = job.copy(labelSource = s"http://localhost:$port/ok/{z}/{x}/{y}.pbf")
+      assert(good.writeParquet(spark, dir + "/good") == 0)
+    }
+  }
+
+  test("a 404 or a garbage label tile gives the empty label, with the image present") {
+    withServer { port =>
+      for (ml <- mlTypes; labels <- Seq("labels/{z}/{x}/{y}.mvt", "bad/{z}/{x}/{y}.pbf")) {
+        val job = LabelMakerJob(13, bounds, classesJson, tms(port),
+          s"http://localhost:$port/$labels", ml)
+        val dir = java.nio.file.Files.createTempDirectory("labelfail").toString
+        assert(job.writeParquet(spark, dir) == 4, s"$ml $labels")
+        val rows = spark.read.parquet(dir).collect()
+        assert(rows.length == 4)
+        rows.foreach { r => assertEmptyLabel(ml, r, nClasses = 2); assertSolidImage(r) }
+      }
+    }
+  }
+
+  test("empty classes with imagery: background-only / zero-box / all-zero labels") {
+    withServer { port =>
+      for (ml <- mlTypes) {
+        val rows = LabelMakerJob(13, bounds, "[]", tms(port),
+          s"http://localhost:$port/labels/{z}/{x}/{y}.pbf", ml).collect(spark)
+        assert(rows.length == 4)
+        rows.foreach { r => assertEmptyLabel(ml, r, nClasses = 0); assertSolidImage(r) }
+      }
+    }
+  }
+
+  test("object-detection with imagery: negative buffer shrinks, a shrunk-away class emits no box") {
+    withServer { port =>
+      val classes =
+        """[
+          |  {"name": "Roads",     "filter": ["has", "highway"], "buffer": -10.0},
+          |  {"name": "Buildings", "filter": ["has", "building"], "buffer": -500.0},
+          |  {"name": "Gone",      "filter": ["has", "building"], "buffer": -3000.0},
+          |  {"name": "Grown",     "filter": ["has", "building"], "buffer": 100.0}
+          |]""".stripMargin
+      val rows = LabelMakerJob(13, bounds, classes, tms(port),
+        s"http://localhost:$port/labels/{z}/{x}/{y}.pbf", "object-detection").collect(spark)
+      assert(rows.length == 4)
+      rows.foreach { r =>
+        val bbs = r.getSeq[Row](r.fieldIndex("label"))
+          .map(b => (b.getInt(0), b.getInt(1), b.getInt(2), b.getInt(3), b.getInt(4)))
+        // polygon 0..4096 shrunk by 500: 500..3596 -> round(31.13)=31,
+        // round(223.87)=224; grown by 100 clamps to the full tile. The line
+        // and the -3000 class shrink away.
+        assert(bbs == Seq((31 - 4, 255 - 224 - 4, 224 + 4, 255 - 31 + 4, 2), (0, 0, 255, 255, 4)))
+        assertSolidImage(r)
+      }
+    }
+  }
+
+  test("segmentation over COG imagery, label requests async beside the synchronous COG read") {
+    withServer { port =>
+      val b = graft.core.Tiles.tileBounds3857(graft.core.TileKey(10, 385, 579))
+      val size = 1024
+      val res = (b.east - b.west) / size
+      val cogPath = java.nio.file.Files.createTempDirectory("cogfused").resolve("imagery.tif").toString
+      graft.sources.TiffWriter.write(cogPath,
+        Seq(graft.sources.TiffWriter.Level(size, size, (x, y) => (42, 84, 126))),
+        tileSize = 128, originX = b.west, originY = b.north, resX = res, resY = res)
+      for (labels <- Seq("labels/{z}/{x}/{y}.pbf", "labels/{z}/{x}/{y}.mvt")) {
+        val rows = LabelMakerJob(13, bounds, classesJson, cogPath,
+          s"http://localhost:$port/$labels", "segmentation").collect(spark)
+        assert(rows.length == 4)
+        rows.foreach { r =>
+          val label = r.getAs[Array[Byte]](r.fieldIndex("label"))
+          if (labels.endsWith(".pbf")) assert(label(127 * 256 + 100) == 1.toByte && label(10 * 256 + 10) == 2.toByte)
+          else assert(label.forall(_ == 0))
+          val img = r.getAs[Array[Byte]](r.fieldIndex("image"))
+          assert(img.length == 256 * 256 * 3 && img(0) == 42.toByte && img(2) == 126.toByte)
+        }
+      }
+    }
   }
 }
